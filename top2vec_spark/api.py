@@ -242,22 +242,36 @@ class Top2VecSpark:
             return load_position_postings(self.spark, self._index.path, words)
         return self.tokens
 
-    def _exclude_tombstones(self, result: DataFrame, k: int, order) -> DataFrame:
-        """Post-delete consistency for positional queries (which have
-        no WAND path): the over-fetch + exclude + re-limit contract —
-        ranks/scores keep the stale corpus stats exactly like the
-        tombstoned WAND path, deleted docs just drop out of the
-        result."""
-        tombs = (
-            self._index.tombstones
-            if getattr(self, "_index", None) is not None
-            else frozenset()
-        )
+    def _live(self, df: DataFrame) -> DataFrame:
+        """``df`` minus its tombstoned doc_ids — the one place deleted
+        documents leave a (doc_id, ...) result outside the WAND kernel
+        (which side-reads its own per-shard sidecar). A left-anti join
+        against the index's tombstone table: no id list rides in the
+        plan, and the table (ids only) sits far below the broadcast
+        threshold, so the join is a BroadcastHashJoin. The table is
+        read — its shard partitions listed — once per change of the
+        tombstone set, not per query; a DataFrame keeps the file list
+        it was created with, so a stale one must not outlive a delete.
+        Scores keep the stale corpus stats exactly like the tombstoned
+        WAND path. The identity without an index or tombstones."""
+        idx = getattr(self, "_index", None)
+        tombs = idx.tombstones if idx is not None else frozenset()
         if not tombs:
-            return result.limit(k) if k is not None else result
-        out = result.filter(~F.col("doc_id").isin([int(d) for d in tombs]))
-        out = out.orderBy(*order)
-        return out.limit(k) if k is not None else out
+            return df
+        cached = getattr(self, "_tomb_table", None)
+        if cached is None or cached[0] is not tombs:
+            table = self.spark.read.parquet(idx.tombstones_path)
+            cached = self._tomb_table = (tombs, table.select("doc_id"))
+        return df.join(cached[1], "doc_id", "left_anti")
+
+    def _exclude_tombstones(self, result: DataFrame, k: int) -> DataFrame:
+        """Re-limit a positional top-k that was over-fetched by
+        len(tombstones) (``phrase_topk`` / ``bool_and_topk`` take k, so
+        the caller asks for k + len(tombstones)): drop the deleted docs
+        through :meth:`_live`, re-rank (the anti-join does not keep
+        order) and cut to k."""
+        order = [F.col("score").desc(), F.col("doc_id").asc()]
+        return self._live(result).orderBy(*order).limit(k)
 
     def compact_index(self):
         """Maintenance hook: fold every streamed/appended epoch and
@@ -278,6 +292,9 @@ class Top2VecSpark:
         if getattr(self, "_index", None) is None:
             raise ValueError("no index — build_index first")
         tpath = self._index.tombstones_path
+        # api deletes left ``docs`` as _live(_docs_all): start from the
+        # pre-delete frame, not from a plan over the tombstone files
+        base = self.__dict__.pop("_docs_all", self.docs)
         if os.path.isdir(tpath):
             # eager localCheckpoint: the compaction swap DELETES the
             # tombstone files, so the filtered-docs plan must not keep
@@ -287,13 +304,17 @@ class Top2VecSpark:
                 .select("doc_id")
                 .localCheckpoint()
             )
-            self.docs = self.docs.join(tomb, "doc_id", "left_anti")
+            self.docs = base.join(tomb, "doc_id", "left_anti")
         self._index = self._index.compact(
             min_count=self.min_count, cfg=self.cfg
         )
         self._derive_corpus_tables()
-        if hasattr(self, "_vocab_map"):
-            del self._vocab_map
+        # the id bounds counted the pre-compaction docs, which still
+        # held the (now dropped) tombstoned ids
+        stale = ("_vocab_map", "_id_bounds", "_live_count", "_tomb_table")
+        for attr in stale:
+            if hasattr(self, attr):
+                delattr(self, attr)
         return self._index
 
     # -- queries ------------------------------------------------------------
@@ -564,7 +585,6 @@ class Top2VecSpark:
         other shape runs the mixed executor over the term-pruned
         token/sidecar scans."""
         self._validate_num_docs(num_docs)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         if (
             search_after is None
             and sort is None
@@ -579,8 +599,18 @@ class Top2VecSpark:
                 self._validate_keywords(terms)
                 result = self._topk(pos, neg, num_docs)
                 return self._project(result, return_documents)
-        scored = self._query_match_scores(
-            query, min_should_match=min_should_match
+        if sort is not None:
+            order = self._sort_order(sort)
+            # doc_id is already in the match set; other sort fields
+            # join in from metadata for the ordering
+            fields = [
+                f for f in dict.fromkeys(f for f, _ in sort) if f != "doc_id"
+            ]
+        else:
+            order = [F.col("score").desc(), F.col("doc_id").asc()]
+            fields = []
+        scored = self._matched(
+            query, *fields, min_should_match=min_should_match
         )
         if search_after is not None:
             if sort is not None:
@@ -604,21 +634,7 @@ class Top2VecSpark:
                     & (F.col("doc_id") > F.lit(d_after))
                 )
             )
-        if sort is not None:
-            order = self._sort_order(sort)
-            # doc_id is already in the match set; other sort fields
-            # join in from metadata for the ordering
-            fields = [
-                f for f in dict.fromkeys(f for f, _ in sort) if f != "doc_id"
-            ]
-            if fields:
-                scored = scored.join(
-                    self.docs.select("doc_id", *fields), "doc_id"
-                )
-        else:
-            order = [F.col("score").desc(), F.col("doc_id").asc()]
-        result = scored.orderBy(*order).limit(num_docs + len(tombs))
-        result = self._exclude_tombstones(result, num_docs, order)
+        result = scored.orderBy(*order).limit(num_docs)
         if sort is not None:
             # drop sort columns _project re-adds from the docs side
             # (url / projected text) — a duplicate column name would
@@ -639,18 +655,47 @@ class Top2VecSpark:
                 result = result.drop(*collide)
         return self._project(result, return_documents, order=order)
 
-    @staticmethod
-    def _reject_join_key_field(field: str, what: str) -> None:
-        """Aggregation/collapse fields join the match set to
-        docs.select('doc_id', field) — field='doc_id' would duplicate
+    _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
+
+    def _meta_field(self, field: str, what: str, numeric: bool = False) -> None:
+        """Validate a metadata-column argument (``what`` names it in
+        the error: facet / stats / sort ...): it must be a docs column
+        ('score' is not one) and, with ``numeric``, a numeric one.
+        Aggregation/collapse fields join the match set to
+        docs.select('doc_id', field), so field='doc_id' would duplicate
         the join key and die later with an ambiguous-reference
-        AnalysisException; reject it up front with a clean error
-        ('score' is not a metadata column, so the unknown-field check
-        already covers it)."""
+        AnalysisException — rejected up front with a clean error."""
+        if field not in self.docs.columns:
+            raise ValueError(
+                f"unknown {what} field '{field}' — not a metadata column"
+            )
         if field == "doc_id":
             raise ValueError(
                 f"'doc_id' cannot be a {what} field (it is the join key)"
             )
+        if numeric:
+            dtype = self.docs.schema[field].dataType.simpleString()
+            if dtype not in self._NUMERIC_TYPES and not dtype.startswith(
+                "decimal"
+            ):
+                raise ValueError(
+                    f"{what} field '{field}' ({dtype}) is not numeric"
+                )
+
+    def _matched(
+        self, query: str, *fields: str, min_should_match: int | None = None
+    ) -> DataFrame:
+        """The LIVE match set of a query-language string as
+        (doc_id, score) — tombstoned docs removed by :meth:`_live` —
+        joined to the metadata ``fields`` when any are named: the
+        shared front half of :meth:`search`, the aggregations,
+        :meth:`count_matches` and :meth:`rescore`."""
+        scored = self._live(
+            self._query_match_scores(query, min_should_match=min_should_match)
+        )
+        if fields:
+            scored = scored.join(self.docs.select("doc_id", *fields), "doc_id")
+        return scored
 
     def _sort_order(self, sort) -> list:
         """Validate an ES-style sort spec [(field, 'asc'|'desc'), ...]
@@ -668,10 +713,8 @@ class Top2VecSpark:
                     "sort must be a non-empty list of (field, 'asc'|'desc')"
                 )
             fld, direction = item
-            if fld not in self.docs.columns:
-                raise ValueError(
-                    f"unknown sort field '{fld}' — not a metadata column"
-                )
+            if fld != "doc_id":  # sort orders by the join key directly
+                self._meta_field(fld, "sort")
             if direction not in ("asc", "desc"):
                 raise ValueError(
                     f"sort direction must be 'asc' or 'desc', got '{direction}'"
@@ -785,9 +828,10 @@ class Top2VecSpark:
         self, query: str, min_should_match: int | None = None
     ) -> DataFrame:
         """FULL match set of a query-language string as
-        (doc_id, score) — the shared front half of :meth:`search`
-        (which ranks and limits it) and :meth:`facet_counts` (which
-        aggregates it whole)."""
+        (doc_id, score), tombstoned docs included — :meth:`_matched`
+        is the live front half every query path uses; only rescore's
+        second pass, already restricted to live window ids, reads this
+        directly."""
         from top2vec_spark.operators.positional import mixed_query_scores
 
         atoms, src, meta = self._parse_and_route(query)
@@ -853,18 +897,10 @@ class Top2VecSpark:
         forms no bucket (ES's missing-bucket default). Tombstoned
         documents are excluded before bucketing, so facet counts
         always agree with what a paging user can retrieve."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown facet field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "facet")
+        self._meta_field(field, "facet")
         self._validate_num(num_facets, "num_facets")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
         return (
-            scored.join(self.docs.select("doc_id", field), "doc_id")
+            self._matched(query, field)
             .filter(F.col(field).isNotNull())
             .groupBy(F.col(field).alias("key"))
             .agg(F.count(F.lit(1)).alias("doc_count"))
@@ -884,28 +920,14 @@ class Top2VecSpark:
         as :meth:`facet_counts`: the scored match set + one metadata
         join + a two-phase hash aggregation on the (derived, still
         low-cardinality) bucket key — one Exchange."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown histogram field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "histogram")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"histogram field '{field}' ({dtype}) is not numeric"
-            )
+        self._meta_field(field, "histogram", numeric=True)
         if not isinstance(interval, (int, float)) or interval <= 0:
             raise ValueError("interval must be a positive number")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
         bucket = (
             F.floor(F.col(field) / F.lit(interval)) * F.lit(interval)
         ).cast("double" if isinstance(interval, float) else "bigint")
         return (
-            scored.join(self.docs.select("doc_id", field), "doc_id")
+            self._matched(query, field)
             .filter(F.col(field).isNotNull())
             .groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("doc_count"))
@@ -920,23 +942,9 @@ class Top2VecSpark:
         excluded). Same plan family as :meth:`facet_counts` with the
         final aggregation global: partial aggregates per partition,
         one single-row Exchange."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown stats field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "stats")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"stats field '{field}' ({dtype}) is not numeric"
-            )
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
+        self._meta_field(field, "stats", numeric=True)
         return (
-            scored.join(self.docs.select("doc_id", field), "doc_id")
+            self._matched(query, field)
             .filter(F.col(field).isNotNull())
             .agg(
                 F.count(F.lit(1)).alias("doc_count"),
@@ -965,26 +973,11 @@ class Top2VecSpark:
         two-phase hash aggregation (one Exchange on the bucket
         key)."""
         for fld in (key_field, metric_field):
-            if fld not in self.docs.columns:
-                raise ValueError(
-                    f"unknown facet field '{fld}' — not a metadata column"
-                )
-            self._reject_join_key_field(fld, "facet")
-        dtype = self.docs.schema[metric_field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"stats field '{metric_field}' ({dtype}) is not numeric"
-            )
+            self._meta_field(fld, "facet")
+        self._meta_field(metric_field, "stats", numeric=True)
         self._validate_num(num_facets, "num_facets")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
         return (
-            scored.join(
-                self.docs.select("doc_id", key_field, metric_field), "doc_id"
-            )
+            self._matched(query, key_field, metric_field)
             .filter(F.col(key_field).isNotNull())
             .groupBy(F.col(key_field).alias("key"))
             .agg(
@@ -1018,21 +1011,13 @@ class Top2VecSpark:
         and the per-group state is one row."""
         from pyspark.sql import Window
 
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown collapse field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "collapse")
+        self._meta_field(field, "collapse")
         self._validate_num_docs(num_docs)
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
         w = Window.partitionBy(field).orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         )
         result = (
-            scored.join(self.docs.select("doc_id", field), "doc_id")
+            self._matched(query, field)
             .filter(F.col(field).isNotNull())
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -1064,17 +1049,7 @@ class Top2VecSpark:
         metadata counts nowhere; tombstones excluded. Plan: match set
         + one metadata join + one aggregate of K conditional counts —
         single-row Exchange, no per-bucket scan."""
-        if field not in self.docs.columns:
-            raise ValueError(
-                f"unknown range field '{field}' — not a metadata column"
-            )
-        self._reject_join_key_field(field, "range")
-        dtype = self.docs.schema[field].dataType.simpleString()
-        if dtype not in ("tinyint", "smallint", "int", "bigint",
-                        "float", "double") and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"range field '{field}' ({dtype}) is not numeric"
-            )
+        self._meta_field(field, "range", numeric=True)
         if not isinstance(ranges, (list, tuple)) or not ranges:
             raise ValueError(
                 "ranges must be a non-empty list of (lo, hi) pairs"
@@ -1097,12 +1072,7 @@ class Top2VecSpark:
             preds.append(p)
             labels.append(f"{'*' if lo is None else lo}-"
                           f"{'*' if hi is None else hi}")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
-        joined = scored.join(self.docs.select("doc_id", field), "doc_id")
-        counts = joined.agg(
+        counts = self._matched(query, field).agg(
             *[
                 F.sum(F.when(p, 1).otherwise(0)).alias(f"_c{i}")
                 for i, p in enumerate(preds)
@@ -1135,15 +1105,11 @@ class Top2VecSpark:
         corpus; the background stats are free from the vocab table.
         Tombstones excluded."""
         self._validate_num(num_terms, "num_terms")
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
         # ONE execution of the match set: the eager localCheckpoint
         # materializes it, the count reads the materialization, and the
         # semi-join below reuses it (previously the unpersisted plan
         # re-ran the whole query a second time for the join)
-        scored = scored.localCheckpoint(eager=True)
+        scored = self._matched(query).localCheckpoint(eager=True)
         n_fg = scored.count()
         if n_fg == 0:
             return self.spark.createDataFrame(
@@ -1228,7 +1194,6 @@ class Top2VecSpark:
                 "num_docs cannot exceed window_size (the rescore "
                 "window bounds the result)"
             )
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         plain = (
             self._plain_query_terms(query)
             if getattr(self, "_index", None) is not None
@@ -1244,11 +1209,9 @@ class Top2VecSpark:
             self._validate_keywords(terms)
             window = self._topk(pos, neg, window_size).collect()
         else:
-            first = self._query_match_scores(query)
-            if tombs:
-                first = first.filter(~F.col("doc_id").isin(list(tombs)))
             window = (
-                first.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+                self._matched(query)
+                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
                 .limit(window_size)
                 .collect()
             )
@@ -1314,18 +1277,15 @@ class Top2VecSpark:
         self._validate_list_arg(phrase, "phrase", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([t.lower() for t in phrase])
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         result = phrase_topk(
             self._positional_tokens(phrase),
             self.doc_stats,
             self.globals,
             phrase,
-            num_docs + len(tombs),
+            num_docs + len(self._index.tombstones if self._index else ()),
             vocab=self.vocab,
         )
-        result = self._exclude_tombstones(
-            result, num_docs, [F.col("score").desc(), F.col("doc_id").asc()]
-        )
+        result = self._exclude_tombstones(result, num_docs)
         return self._project(result, return_documents)
 
     def search_documents_by_keywords_all(
@@ -1341,7 +1301,6 @@ class Top2VecSpark:
         self._validate_list_arg(keywords, "keywords", "strings")
         self._validate_num_docs(num_docs)
         self._validate_keywords([k.lower() for k in keywords])
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
         result = bool_and_topk(
             self.spark,
             self._positional_tokens(keywords),
@@ -1349,11 +1308,9 @@ class Top2VecSpark:
             self.globals,
             self.vocab,
             keywords,
-            num_docs + len(tombs),
+            num_docs + len(self._index.tombstones if self._index else ()),
         )
-        result = self._exclude_tombstones(
-            result, num_docs, [F.col("score").desc(), F.col("doc_id").asc()]
-        )
+        result = self._exclude_tombstones(result, num_docs)
         return self._project(result, return_documents)
 
     def search_documents_by_proximity(
@@ -1370,11 +1327,12 @@ class Top2VecSpark:
         self._validate_num_docs(num_docs)
         self._validate_keywords([k.lower() for k in keywords])
         order = [F.col("span").asc(), F.col("doc_id").asc()]
-        result = self._exclude_tombstones(
-            min_cover_span(self._positional_tokens(keywords), keywords)
-            .orderBy(*order),
-            num_docs,
-            order,
+        result = (
+            self._live(
+                min_cover_span(self._positional_tokens(keywords), keywords)
+            )
+            .orderBy(*order)
+            .limit(num_docs)
         )
         return self._project(result, return_documents, order=order)
 
@@ -1390,11 +1348,7 @@ class Top2VecSpark:
         # snippets slice the FULL token stream (non-query words in the
         # window), so the source stays the raw tokens table; only the
         # tombstone exclusion applies
-        return self._exclude_tombstones(
-            best_snippet(self.tokens, keywords, width=width),
-            None,
-            [F.col("doc_id").asc()],
-        )
+        return self._live(best_snippet(self.tokens, keywords, width=width))
 
     def highlights(self, query: str, width: int = 8) -> DataFrame:
         """Best-window highlight per matching document for a
@@ -1477,11 +1431,7 @@ class Top2VecSpark:
         the FULL match set :meth:`search` ranks (every scoring,
         filter, and must rule applied; tombstones excluded) — the
         Lucene TotalHitCountCollector / ES track_total_hits shape."""
-        scored = self._query_match_scores(query)
-        tombs = self._index.tombstones if getattr(self, "_index", None) else ()
-        if tombs:
-            scored = scored.filter(~F.col("doc_id").isin(list(tombs)))
-        return scored.count()
+        return self._matched(query).count()
 
     def search_words_by_keywords(
         self,
@@ -3485,8 +3435,16 @@ class Top2VecSpark:
         Without an index: engine over the filtered corpus."""
         self._validate_doc_ids(doc_ids)
         if self._index is not None:
+            live, before = self._live_doc_count(), self._index.tombstones
             self._index.delete_documents(doc_ids)
-            self.docs = self.docs.filter(~F.col("doc_id").isin(list(doc_ids)))
+            tombs = self._index.tombstones
+            # validated ids are live, so the count drops by the new
+            # tombstones alone: the next query's bound needs no job
+            self._live_count = (tombs, live - len(tombs - before))
+            # one anti-join over the pre-delete frame, not one more
+            # doc_id in-list per delete
+            self._docs_all = getattr(self, "_docs_all", self.docs)
+            self.docs = self._live(self._docs_all)
             if hasattr(self, "doc_topic"):  # A5: sizes shrink in place
                 self.doc_topic = self.doc_topic.filter(
                     ~F.col("doc_id").isin(list(doc_ids))
@@ -3627,17 +3585,30 @@ class Top2VecSpark:
             raise ValueError(f"{var_name} must be >= 1")
 
     def _validate_num_docs(self, num_docs: int) -> None:
-        """Reference _validate_num_docs (top2vec.py:1363-1367) —
-        document_count from the cached bounds aggregate, no per-call
-        scan."""
+        """Reference _validate_num_docs (top2vec.py:1363-1367) against
+        the live document count, no per-call scan."""
         self._validate_num(num_docs, "num_docs")
-        _, _, n, _ = self._doc_id_bounds()
-        if self._index is not None:
-            n -= len(self._index.tombstones)  # bounds are pre-delete
+        n = self._live_doc_count()
         if num_docs > n:
             raise ValueError(
                 f"num_docs cannot exceed the number of documents: {n}."
             )
+
+    def _live_doc_count(self) -> int:
+        """Documents a query can return: ``docs`` through :meth:`_live`.
+        Counting the live frame is right whether ``docs`` still holds
+        the tombstoned ids (deletes on the raw index) or not (api
+        deletes filter it, and :meth:`save` persists the filtered
+        frame). Without tombstones it is the cached bounds count. With
+        them it is cached per tombstone set: :meth:`delete_documents`
+        updates it in place, so only a set this engine did not write
+        (a loaded index, a delete on the raw index) costs one count."""
+        tombs = self._index.tombstones if self._index is not None else ()
+        if not tombs:
+            return self._doc_id_bounds()[2]
+        if getattr(self, "_live_count", (None,))[0] is not tombs:
+            self._live_count = (tombs, self._live(self.docs).count())
+        return self._live_count[1]
 
     def _validate_num_topics(self, num_topics: int, reduced: bool) -> None:
         """Reference _validate_num_topics (top2vec.py:1369-1378)."""

@@ -421,8 +421,13 @@ def span_near_tf(
     return qualifying.groupBy("doc_id").agg(F.count(F.lit(1)).alias("tf"))
 
 
+# Vocabulary terms one wildcard/fuzzy atom may expand to — shared by the
+# facade's source router and the executor so both resolve the same set.
+MAX_EXPANSIONS = 128
+
+
 def expand_wildcard_terms(
-    vocab: DataFrame, pat: str, max_expansions: int = 128
+    vocab: DataFrame, pat: str, max_expansions: int = MAX_EXPANSIONS
 ) -> list:
     """Resolve one wildcard atom against the vocabulary into concrete
     (term, df) rows — Lucene PrefixQuery/WildcardQuery expansion as
@@ -472,7 +477,7 @@ def expand_wildcard_terms(
 
 
 def expand_fuzzy_terms(
-    vocab: DataFrame, word: str, fz: int, max_expansions: int = 128
+    vocab: DataFrame, word: str, fz: int, max_expansions: int = MAX_EXPANSIONS
 ) -> list:
     """Resolve one fuzzy atom (``word~fz``) against the vocabulary
     into concrete (term, df) rows — Lucene FuzzyQuery's automaton walk
@@ -513,7 +518,7 @@ def _mixed_contribs(
     vocab: DataFrame,
     atoms: Sequence[tuple[float, tuple[str, ...]]],
     cfg: BM25Config = BM25Config(),
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS,
     doc_meta: DataFrame | None = None,
 ):
     """Shared front half of :func:`mixed_query_scores` and
@@ -743,7 +748,7 @@ def mixed_query_scores(
     vocab: DataFrame,
     atoms: Sequence[tuple[float, tuple[str, ...]]],
     cfg: BM25Config = BM25Config(),
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS,
     doc_meta: DataFrame | None = None,
     min_should_match: int | None = None,
 ) -> DataFrame:
@@ -860,7 +865,7 @@ def mixed_query_explain(
     atoms: Sequence[tuple[float, tuple[str, ...]]],
     doc_id: int,
     cfg: BM25Config = BM25Config(),
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS,
     doc_meta: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene ``IndexSearcher.explain`` re-expression: the per-atom
@@ -910,7 +915,7 @@ def mixed_query_topk(
     atoms: Sequence[tuple[float, tuple[str, ...]]],
     k: int,
     cfg: BM25Config = BM25Config(),
-    max_expansions: int = 128,
+    max_expansions: int = MAX_EXPANSIONS,
     doc_meta: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k over :func:`mixed_query_scores` — (doc_id, score), score

@@ -220,11 +220,16 @@ class PostingsIndex:
         rebuild compacts (documented, matches the reference which
         also does not retrain after deletes).
 
-        NOTE: this is a driver-side materialization used by id
-        VALIDATION only — the query hot path never touches it; WAND
-        kernels side-read the shard-partitioned tombstone sidecar
-        (operators/wand._load_tomb_sidecar) so the exclusion set never
-        rides in a task closure."""
+        NOTE: this is a driver-side materialization. The facade reads
+        it for doc-id validation, the num_docs bound and the
+        k + len(tombstones) over-fetch of phrase_topk / bool_and_topk,
+        and keys its cached live count and tombstone-table read on this
+        set's identity (a delete replaces the set). No query excludes
+        deletes through it: WAND kernels side-read the shard-partitioned
+        tombstone sidecar (operators/wand._load_tomb_sidecar), and every
+        other facade path left-anti-joins the tombstone table
+        (api.Top2VecSpark._live), so the set never rides in a task
+        closure or a plan."""
         if not hasattr(self, "_tombstones"):
             tpath = f"{self.path}/tombstones"
             if os.path.isdir(tpath):
